@@ -5,13 +5,13 @@ Pipeline (SURVEY.md §3.4):
     read pages (parquet locally; Iceberg in production — same DataFrame
       code, the source format is a config string)
     → resume anti-join against the lineage table's completed buckets
-    → salted repartition by url-hash (skew defusal: heavy-tailed doc
-      sizes; hashing decorrelates neighbors, AQE handles the rest)
+    → size-tiered url-hash repartition (skew defusal: light payloads
+      hash-spread over `partitions`, giant ones over a mostly-empty
+      heavy tier)
     → ONE mapInPandas pass: sniff payload → from-scratch PDF byte-stream
       parse (text T1 + metadata T4 + tables X1-X5) or HTML boilerplate
-      strip (T10) — Arrow-batched, no per-row Python
-    → native T2 clean (regexp chain, whole-stage codegen)
-    → T3 chunk pandas UDF
+      strip (T10), then T2 clean and T3 chunk on the same rows —
+      Arrow-batched, no per-row Python round-trip
     → write documents + per-bucket lineage/metrics rows
 
 The reference equivalent is PDFParser.parse_pdf
@@ -34,26 +34,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from ..functions.chunk import make_chunk_udf
-from ..functions.clean import clean_text_col
 from ..sources import append_table, is_path_ref, read_table, table_exists
-
-#: columns produced by the extraction mapInPandas pass (pre clean/chunk)
-EXTRACT_SCHEMA = StructType([
-    StructField("url", StringType()),
-    StructField("kind", StringType()),           # pdf | html | empty
-    StructField("raw_text", StringType()),
-    StructField("metadata", MapType(StringType(), StringType())),
-    StructField("tables_json", StringType()),    # X1-X5 output (JSON), M3
-    StructField("num_tables", IntegerType()),
-    StructField("n_bytes", LongType()),
-    StructField("error", StringType()),
-])
-
-DOCUMENTS_COLUMNS = [
-    "url", "kind", "text", "chunk_lens", "num_chunks", "metadata",
-    "tables_json", "num_tables", "ocr_used", "n_bytes", "error",
-]
 
 
 def extract_one(payload: Optional[bytes], force_ocr: bool = False,
@@ -122,16 +103,6 @@ def extract_one(payload: Optional[bytes], force_ocr: bool = False,
     except Exception:
         out["error"] = traceback.format_exc(limit=3)
     return out
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for b in batches:
-        rows = []
-        for url, payload in zip(b["url"], b["html"]):
-            r = extract_one(payload)
-            r["url"] = url
-            rows.append(r)
-        yield pd.DataFrame(rows, columns=[f.name for f in EXTRACT_SCHEMA.fields])
 
 
 #: fused-stage output: extraction + T2 clean + T3 chunk in ONE Python
@@ -222,17 +193,17 @@ def _make_fused_batches(chunk_size: int, chunk_overlap: int,
 #: payload-size cutoff (bytes) above which a document is routed to the
 #: heavy tier. 4 MiB ≈ 40x the median crawl page; anything above it is
 #: the multi-hundred-MB-PDF tail the north rule's skew handling exists
-#: for. Override per corpus (or pass size_col for a metadata split).
+#: for.
 DEFAULT_HEAVY_BYTES = 4 * 1024 * 1024
+
+#: heavy-tier partitions per light partition
+HEAVY_FANOUT = 4
 
 
 def size_tiered_repartition(
     df: DataFrame,
     partitions: int,
-    payload_col: str = "html",
     heavy_bytes: int = DEFAULT_HEAVY_BYTES,
-    heavy_fanout: int = 4,
-    size_col: Optional[str] = None,
 ) -> DataFrame:
     """Byte-size-aware skew defusal (SURVEY §4.3): url-hash salting
     alone spreads doc COUNT evenly, but a heavy tail of giant documents
@@ -241,11 +212,12 @@ def size_tiered_repartition(
     a task that drew a giant PLUS its full share of small docs idles
     the rest of the cluster at stage end.
 
-    Fix: tier by payload size.
-    - light docs (< heavy_bytes) hash-spread over `partitions` exactly
-      as before — balls-into-bins variance on bounded-size docs is
-      O(1/sqrt(n/P)), sub-1% at any realistic partition size;
-    - heavy docs hash-spread over `partitions * heavy_fanout` MOSTLY-
+    Fix: tier by the byte length of the `html` payload.
+    - light docs (< heavy_bytes) hash-spread over `partitions` by the
+      full-width xxhash64(url) — decorrelating crawl locality, with
+      balls-into-bins variance on bounded-size docs of O(1/sqrt(n/P)),
+      sub-1% at any realistic partition size;
+    - heavy docs hash-spread over `partitions * HEAVY_FANOUT` MOSTLY-
       EMPTY partitions, so each heavy task holds ~one giant and no
       light share: the stage's critical path drops to max(light share,
       one giant parse) — the irreducible floor without splitting a
@@ -257,41 +229,16 @@ def size_tiered_repartition(
     only a no-op task launch.
 
     I/O note for 100 TB: the two `where` branches each scan the
-    source, and `length(payload)` must read the payload bytes — a 2x
-    read of the payload column. On a real lakehouse table pass
-    `size_col` (e.g. the WARC record length column every crawl table
-    carries): the split predicate then pushes down to row-group /
-    file stats and each branch reads only its own rows.
+    source, and `length(html)` must read the payload bytes — a 2x read
+    of the payload column.
     """
-    nbytes = (F.col(size_col).cast("long") if size_col
-              else F.coalesce(F.length(F.col(payload_col)).cast("long"),
-                              F.lit(0)))
+    nbytes = F.coalesce(F.length(F.col("html")).cast("long"), F.lit(0))
     light = df.where(nbytes < F.lit(heavy_bytes))
     heavy = df.where(nbytes >= F.lit(heavy_bytes))
     light_rep = light.repartition(partitions, F.xxhash64(F.col("url")))
-    heavy_rep = heavy.repartition(partitions * heavy_fanout,
+    heavy_rep = heavy.repartition(partitions * HEAVY_FANOUT,
                                   F.xxhash64(F.col("url")))
     return light_rep.unionByName(heavy_rep)
-
-
-def salted_repartition(df: DataFrame, partitions: int) -> DataFrame:
-    """Skew-defusing repartition: full-width url-hash, per the north
-    rule.
-
-    xxhash64(url) decorrelates crawl locality (adjacent urls from one
-    giant host land on different executors); AQE cannot split a
-    straggler *map* task, so this pre-balance is our own code.
-
-    The hash is used at FULL width — reducing it first (e.g.
-    pmod(hash, partitions*8)) quantizes rows into only ~8 salt groups
-    per partition, and balls-into-bins variance then leaves some
-    partitions ~2x the mean → a straggler TAIL that idles most of the
-    cluster at the end of the stage (measured: the 4N-level scaling
-    run spent its last ~30% of wall at <3/8 busy slots). With ~n/P
-    distinct urls per partition the imbalance is O(1/sqrt(n/P)) —
-    sub-1% at any realistic partition size.
-    """
-    return df.repartition(partitions, F.xxhash64(F.col("url")))
 
 
 def extract_documents(
@@ -299,64 +246,26 @@ def extract_documents(
     partitions: Optional[int] = None,
     chunk_size: int = 1000,
     chunk_overlap: int = 200,
-    fused: bool = True,
     force_ocr: bool = False,
     ocr_engine=None,
-    heavy_bytes: Optional[int] = DEFAULT_HEAVY_BYTES,
-    heavy_fanout: int = 4,
-    size_col: Optional[str] = None,
 ) -> DataFrame:
     """pages → documents DataFrame (lazy; no side effects).
 
-    fused=True (default) runs extraction + clean + chunk in ONE
-    mapInPandas stage — a single Arrow round-trip over the payloads.
-    fused=False keeps T2 as a native regexp chain + T3 as a separate
-    pandas UDF (the operator-granular path the oracle queries check;
-    both paths produce identical rows — tests assert it).
+    size_tiered_repartition spreads the (url, html) rows, then ONE
+    mapInPandas stage runs extraction + clean + chunk — a single Arrow
+    round-trip over the payloads.
 
-    force_ocr=True (fused path only) mirrors the reference's
-    --force-ocr flag: PDF documents additionally carry
-    ocr_text/ocr_num_chunks/ocr_by_page/ocr_error columns produced by
-    the injected OCR engine inside the SAME mapInPandas pass.
-
-    heavy_bytes (default 4 MiB) routes giant payloads to their own
-    mostly-empty partition tier (size_tiered_repartition) so a heavy
-    byte tail cannot straggle the extraction stage; pass None to fall
-    back to pure url-hash salting (count balance only).
+    force_ocr=True mirrors the reference's --force-ocr flag: PDF
+    documents additionally carry ocr_text/ocr_num_chunks/ocr_by_page/
+    ocr_error columns produced by the injected OCR engine inside the
+    SAME mapInPandas pass.
     """
     spark = pages.sparkSession
     partitions = partitions or spark.sparkContext.defaultParallelism * 2
-    cols = ["url", "html"] + ([size_col] if size_col else [])
-    if heavy_bytes is not None:
-        salted = size_tiered_repartition(
-            pages.select(*cols), partitions, heavy_bytes=heavy_bytes,
-            heavy_fanout=heavy_fanout, size_col=size_col,
-        ).select("url", "html")
-    else:
-        salted = salted_repartition(pages.select("url", "html"), partitions)
-
-    if force_ocr:
-        return salted.mapInPandas(
-            _make_fused_batches(chunk_size, chunk_overlap,
-                                force_ocr=True, ocr_engine=ocr_engine),
-            FUSED_OCR_SCHEMA,
-        ).select(*DOCUMENTS_COLUMNS,
-                 "ocr_text", "ocr_num_chunks", "ocr_by_page", "ocr_error")
-    if fused:
-        return salted.mapInPandas(
-            _make_fused_batches(chunk_size, chunk_overlap), FUSED_SCHEMA
-        ).select(*DOCUMENTS_COLUMNS)
-
-    extracted = salted.mapInPandas(_extract_batches, EXTRACT_SCHEMA)
-    chunk_udf = make_chunk_udf(chunk_size, chunk_overlap)
-    return (
-        extracted
-        .withColumn("text", clean_text_col(F.col("raw_text")))
-        .withColumn("chunks", chunk_udf(F.col("text")))
-        .withColumn("chunk_lens", F.transform("chunks", F.length))
-        .withColumn("num_chunks", F.size("chunks"))
-        .withColumn("ocr_used", F.lit(False))
-        .select(*DOCUMENTS_COLUMNS)
+    spread = size_tiered_repartition(pages.select("url", "html"), partitions)
+    return spread.mapInPandas(
+        _make_fused_batches(chunk_size, chunk_overlap, force_ocr, ocr_engine),
+        FUSED_OCR_SCHEMA if force_ocr else FUSED_SCHEMA,
     )
 
 

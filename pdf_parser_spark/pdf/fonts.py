@@ -241,3 +241,32 @@ def build_font(doc, font_dict: dict) -> Font:
         f.space_code = 32
     f.space_width = f.widths.get(f.space_code, 250.0)
     return f
+
+
+def fonts_for(doc, resources, cache: Dict[int, Font]) -> Dict[str, Font]:
+    """Resolve the /Font entries of a resource dictionary to Fonts.
+
+    Each font dictionary is built once per `cache` (keyed by the id of
+    the resolved dict); a font that fails to build maps to a default
+    Font so one bad resource cannot abort the page."""
+    r = doc.resolve
+    res = r(resources)
+    if isinstance(res, StreamObject):
+        res = res.dict
+    fonts: Dict[str, Font] = {}
+    if isinstance(res, dict):
+        fdict = r(res.get("Font"))
+        if isinstance(fdict, dict):
+            for name, fref in fdict.items():
+                fd = r(fref)
+                if isinstance(fd, StreamObject):
+                    fd = fd.dict
+                if isinstance(fd, dict):
+                    key = id(fd)
+                    if key not in cache:
+                        try:
+                            cache[key] = build_font(doc, fd)
+                        except Exception:
+                            cache[key] = Font()
+                    fonts[str(name)] = cache[key]
+    return fonts

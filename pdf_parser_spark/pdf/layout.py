@@ -27,7 +27,7 @@ from typing import Dict, List, Optional, Tuple
 
 from .content import tokenize
 from .document import PdfDocument
-from .fonts import Font, build_font
+from .fonts import Font, fonts_for
 from .objects import StreamObject
 from .text import _IDENTITY, _mult, _orient
 
@@ -101,33 +101,10 @@ class _GeomExtractor:
         self.image_paints: List[tuple] = []
         self._draw_seq = 0
 
-    def _fonts_for(self, resources) -> Dict[str, Font]:
-        r = self.doc.resolve
-        res = r(resources)
-        if isinstance(res, StreamObject):
-            res = res.dict
-        fonts: Dict[str, Font] = {}
-        if isinstance(res, dict):
-            fdict = r(res.get("Font"))
-            if isinstance(fdict, dict):
-                for name, fref in fdict.items():
-                    fd = r(fref)
-                    if isinstance(fd, StreamObject):
-                        fd = fd.dict
-                    if isinstance(fd, dict):
-                        key = id(fd)
-                        if key not in self._font_cache:
-                            try:
-                                self._font_cache[key] = build_font(self.doc, fd)
-                            except Exception:
-                                self._font_cache[key] = Font()
-                        fonts[str(name)] = self._font_cache[key]
-        return fonts
-
     def extract(self, content: bytes, resources, depth: int = 0,
                 init: Optional[tuple] = None) -> None:
         doc = self.doc
-        fonts = self._fonts_for(resources)
+        fonts = fonts_for(doc, resources, self._font_cache)
 
         tm = list(_IDENTITY)
         stack: List[tuple] = []

@@ -23,7 +23,7 @@ from typing import Dict, Optional
 
 from .content import tokenize
 from .document import PdfDocument
-from .fonts import Font, build_font
+from .fonts import Font, fonts_for
 from .objects import StreamObject
 
 
@@ -61,32 +61,9 @@ class _Extractor:
         self.doc = doc
         self._font_cache: Dict[int, Font] = {}
 
-    def _fonts_for(self, resources) -> Dict[str, Font]:
-        r = self.doc.resolve
-        res = r(resources)
-        if isinstance(res, StreamObject):
-            res = res.dict
-        fonts: Dict[str, Font] = {}
-        if isinstance(res, dict):
-            fdict = r(res.get("Font"))
-            if isinstance(fdict, dict):
-                for name, fref in fdict.items():
-                    fd = r(fref)
-                    if isinstance(fd, StreamObject):
-                        fd = fd.dict
-                    if isinstance(fd, dict):
-                        key = id(fd)
-                        if key not in self._font_cache:
-                            try:
-                                self._font_cache[key] = build_font(self.doc, fd)
-                            except Exception:
-                                self._font_cache[key] = Font()
-                        fonts[str(name)] = self._font_cache[key]
-        return fonts
-
     def extract(self, content: bytes, resources, depth: int = 0) -> str:
         doc = self.doc
-        fonts = self._fonts_for(resources)
+        fonts = fonts_for(doc, resources, self._font_cache)
 
         cm = list(_IDENTITY)
         tm = list(_IDENTITY)

@@ -16,8 +16,6 @@ included as the monitoring example (tumbling count by minute).
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,25 +23,17 @@ from ..jobs.extract import FUSED_SCHEMA, _make_fused_batches
 from ..datagen.pages import PAGES_SCHEMA
 
 
-def read_pages_stream(spark: SparkSession, pages_dir: str,
-                      max_files_per_trigger: Optional[int] = None) -> DataFrame:
-    reader = (
-        spark.readStream.schema(PAGES_SCHEMA).format("parquet")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(pages_dir)
+def read_pages_stream(spark: SparkSession, pages_dir: str) -> DataFrame:
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
 
 
 def extract_documents_stream(pages: DataFrame,
                              chunk_size: int = 1000,
                              chunk_overlap: int = 200) -> DataFrame:
-    """Streaming documents DataFrame — same fused stage as batch.
+    """Streaming documents DataFrame — the batch job's fused stage.
 
-    No repartition here: the streaming micro-batch sizing
-    (maxFilesPerTrigger) is the parallelism control, and a shuffle
-    inside a streaming query would force stateful exchange for no
-    benefit on a stateless map."""
+    No repartition here: a shuffle inside a streaming query would
+    force stateful exchange for no benefit on a stateless map."""
     return pages.select("url", "html").mapInPandas(
         _make_fused_batches(chunk_size, chunk_overlap), FUSED_SCHEMA
     )
@@ -54,21 +44,21 @@ def run_extract_stream(
     pages_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Start (and with available_now=True, drain) the streaming job."""
+    """Drain every pages file present now into the documents sink, then
+    stop (availableNow) — a deployment drops the trigger for a
+    continuous run."""
     docs = extract_documents_stream(read_pages_stream(spark, pages_dir))
-    writer = (
+    q = (
         docs.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return q
-    return writer.trigger(processingTime="10 seconds").start()
+    q.awaitTermination()
+    return q
 
 
 def throughput_metrics_stream(docs: DataFrame) -> DataFrame:

@@ -77,17 +77,30 @@ def test_chunks_match_reference_algorithm(spark, pages_dir):
         assert r.num_chunks == len(r.chunk_lens)
 
 
-def test_fused_and_unfused_paths_agree(spark, pages_dir):
-    from pdf_parser_spark.jobs.extract import extract_documents
+def test_native_clean_and_chunk_match_python_twins(spark, pages_dir):
+    """__spark_entry__ runs T2 as the native clean_text_col regexp chain
+    and T3 as the make_chunk_udf pandas UDF; the extraction stage runs
+    their Python twins. Both must agree on real extracted text."""
+    from pdf_parser_spark.functions.chunk import chunk_text, make_chunk_udf
+    from pdf_parser_spark.functions.clean import clean_text, clean_text_col
+    from pdf_parser_spark.jobs.extract import extract_one
 
     pages = spark.read.parquet(os.path.join(pages_dir, "pages.parquet")).limit(40)
-    a = {r.url: r for r in extract_documents(pages, fused=True).collect()}
-    b = {r.url: r for r in extract_documents(pages, fused=False).collect()}
-    assert set(a) == set(b)
-    for url in a:
-        assert a[url].text == b[url].text, url
-        assert list(a[url].chunk_lens) == list(b[url].chunk_lens), url
-        assert a[url].num_chunks == b[url].num_chunks, url
+    raw = spark.createDataFrame(
+        [(p.url, extract_one(p.html)["raw_text"]) for p in pages.collect()],
+        "url string, raw_text string",
+    )
+    chunk_udf = make_chunk_udf(1000, 200)
+    native = (
+        raw.withColumn("text", clean_text_col(F.col("raw_text")))
+        .withColumn("chunk_lens", F.transform(chunk_udf(F.col("text")), F.length))
+        .collect()
+    )
+    assert len(native) == 40
+    for r in native:
+        text = clean_text(r.raw_text)
+        assert r.text == text, r.url
+        assert list(r.chunk_lens) == [len(c) for c in chunk_text(text)], r.url
 
 
 def test_degenerate_payloads_contained(spark):
@@ -114,6 +127,38 @@ def test_degenerate_payloads_contained(spark):
     rows = {r.url: r for r in extract_documents(probe, partitions=2).collect()}
     assert rows["u_empty"].kind == "empty" and rows["u_empty"].error is None
     # garbage without %PDF magic routes to the HTML path, contained
+    assert rows["u_garbage"].kind == "html"
+    assert rows["u_garbage"].error is None
+    assert rows["u_truncated"].kind == "pdf"
+    assert rows["u_truncated"].error is not None
+    assert "no pages recovered" in rows["u_truncated"].error
+    assert rows["u_html"].error is None
+    assert "ten words of real content" in rows["u_html"].text
+
+
+def test_degenerate_synthetic_payloads_contained(spark):
+    """Same containment contract as test_degenerate_payloads_contained,
+    with the truncated row cut from a generated PDF instead of a
+    reference fixture: garbage, empty, truncated-PDF and HTML rows all
+    extract, and the truncated PDF surfaces its failure in `error`."""
+    from pdf_parser_spark.datagen.pdfgen import build_pdf
+    from pdf_parser_spark.jobs.extract import extract_documents
+
+    pdf = build_pdf([["first page line one", "first page line two"],
+                     ["second page line"]])
+    probe = spark.createDataFrame(
+        [
+            ("u_garbage", b"\x00\xffgarbage bytes"),
+            ("u_empty", b""),
+            ("u_truncated", pdf[:300]),
+            ("u_html", b"<html><body><p>"
+             + b"ten words of real content keeps this block classified "
+             b"as main text</p></body></html>"),
+        ],
+        "url string, html binary",
+    )
+    rows = {r.url: r for r in extract_documents(probe, partitions=2).collect()}
+    assert rows["u_empty"].kind == "empty" and rows["u_empty"].error is None
     assert rows["u_garbage"].kind == "html"
     assert rows["u_garbage"].error is None
     assert rows["u_truncated"].kind == "pdf"

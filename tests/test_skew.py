@@ -1,4 +1,4 @@
-"""North-rule skew defusal: salted repartition by url-hash must spread
+"""North-rule skew defusal: url-hash repartitioning must spread
 a pathologically skewed crawl (one host's giant documents arriving
 consecutively) evenly across partitions; LSH bucket caps must drop
 degenerate (boilerplate-identical) buckets instead of fanning out
@@ -7,7 +7,7 @@ quadratically; clustering must converge past any fixed round count."""
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.jobs.extract import (
-    extract_one, salted_repartition, size_tiered_repartition,
+    DEFAULT_HEAVY_BYTES, extract_one, size_tiered_repartition,
 )
 from pdf_parser_spark.operators import dedup
 from pdf_parser_spark.operators import similarity as sim
@@ -36,7 +36,9 @@ def test_salting_spreads_clustered_giants(spark):
     # the giants together
     naive = pages.repartitionByRange(n_parts, "url")
     naive_sums = _partition_byte_sums(naive)
-    salted = salted_repartition(pages, n_parts)
+    # every payload is below heavy_bytes: the heavy tier stays empty and
+    # this is the plain url-hash repartition over n_parts
+    salted = size_tiered_repartition(pages, n_parts)
     salted_sums = _partition_byte_sums(salted)
 
     total = sum(salted_sums)
@@ -96,7 +98,10 @@ def test_size_tiering_bounds_straggler_wall(spark):
     pages = spark.createDataFrame(rows, "url string, html binary")
     n_parts = 8
 
-    salted = salted_repartition(pages, n_parts)
+    # url-hash only: the giant is below the default heavy_bytes, so it
+    # rides a light partition with that partition's full light share
+    assert max(len(html) for _, html in rows) < DEFAULT_HEAVY_BYTES
+    salted = size_tiered_repartition(pages, n_parts)
     tiered = size_tiered_repartition(pages, n_parts,
                                      heavy_bytes=1_000_000)
 

@@ -22,7 +22,7 @@ def test_stream_matches_batch(spark, pages_dir, tmp_path):
 
     out = str(tmp_path / "docs")
     ckpt = str(tmp_path / "ckpt")
-    run_extract_stream(spark, pages_dir, out, ckpt, available_now=True)
+    run_extract_stream(spark, pages_dir, out, ckpt)
     got = {r.url: r for r in spark.read.parquet(out).collect()}
 
     batch = {
@@ -35,7 +35,7 @@ def test_stream_matches_batch(spark, pages_dir, tmp_path):
         assert got[url].num_chunks == batch[url].num_chunks, url
 
     # resume: re-running with the same checkpoint ingests nothing new
-    run_extract_stream(spark, pages_dir, out, ckpt, available_now=True)
+    run_extract_stream(spark, pages_dir, out, ckpt)
     assert spark.read.parquet(out).count() == 48
 
 
@@ -49,14 +49,14 @@ def test_stream_picks_up_new_files(spark, pages_dir, tmp_path):
     first = generate_pages(spark, 8, seed=11, include_fixtures=False)
     cols = [f.name for f in PAGES_SCHEMA.fields]
     first.select(*cols).write.mode("append").parquet(src)
-    run_extract_stream(spark, src, out, ckpt, available_now=True)
+    run_extract_stream(spark, src, out, ckpt)
     assert spark.read.parquet(out).count() == 8
 
     more = generate_pages(spark, 6, seed=12, include_fixtures=False)
     more.select(*cols).withColumn(
         "url", F.concat(F.lit("b/"), F.col("url"))
     ).write.mode("append").parquet(src)
-    run_extract_stream(spark, src, out, ckpt, available_now=True)
+    run_extract_stream(spark, src, out, ckpt)
     assert spark.read.parquet(out).count() == 14
 
 

@@ -82,17 +82,6 @@ def main() -> None:
         "distinct. Full texts never shuffle.",
     )
 
-    add(
-        "Salted-only extraction (heavy_bytes=None contrast)",
-        extract_documents(entry._html_pages(docs), heavy_bytes=None),
-        "The pre-round-3 shape for contrast with the tiered default "
-        "above: ONE url-hash Exchange, no tier split. Fine when the "
-        "payload size distribution is tight; the tiered default is "
-        "what defuses giant-PDF stragglers (on a lakehouse table the "
-        "tier predicate pushes to file stats via size_col, so "
-        "neither branch rescans payloads).",
-    )
-
     ivf_index = __import__(
         "pdf_parser_spark.operators.similarity", fromlist=["similarity"]
     ).ivf_build(
